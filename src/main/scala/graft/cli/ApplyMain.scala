@@ -20,7 +20,7 @@ import org.apache.spark.sql.SparkSession
   * reference's transaction/timeout envelope.
   */
 object ApplyMain {
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit = Utf8Stdout {
     if (args.length < 2) { usage(); sys.exit(2) }
     val (dir, trackerDir) = (args(0), args(1))
     var dryRun = false; var force = false; var jdbcUrl = ""
@@ -93,14 +93,9 @@ object ApplyMain {
       val r = ex.apply(migrations)
       println(s"applied ${r.applied.length}, skipped ${r.skipped.length}")
     } catch {
-      case e: EngineError =>
-        System.err.println(s"error: ${e.getMessage}"); sys.exit(1)
-      case scala.util.control.NonFatal(e) =>
-        // runner/SQL failures (already reported via Failed progress)
-        // exit cleanly like the reference CLI, not with a stack trace
-        System.err.println(s"error: ${e.getMessage.linesIterator
-          .find(_.nonEmpty).getOrElse(e.getClass.getSimpleName)}")
-        sys.exit(1)
+      // engine errors and runner/SQL failures (already reported via
+      // Failed progress) exit cleanly like the reference CLI
+      case scala.util.control.NonFatal(e) => CliArgs.fail(e)
     } finally spark.stop()
   }
 
@@ -119,7 +114,7 @@ object ApplyMain {
 }
 
 object RollbackMain {
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit = Utf8Stdout {
     if (args.length < 3) { usage(); sys.exit(2) }
     val (dir, trackerDir) = (args(0), args(1))
     var steps = -1; var target = ""; var jdbcUrl = ""
@@ -164,12 +159,7 @@ object RollbackMain {
         else ex.rollbackToVersion(migrations, target)
       println(s"rolled back ${r.rolledBack.length}")
     } catch {
-      case e: EngineError =>
-        System.err.println(s"error: ${e.getMessage}"); sys.exit(1)
-      case scala.util.control.NonFatal(e) =>
-        System.err.println(s"error: ${e.getMessage.linesIterator
-          .find(_.nonEmpty).getOrElse(e.getClass.getSimpleName)}")
-        sys.exit(1)
+      case scala.util.control.NonFatal(e) => CliArgs.fail(e)
     } finally spark.stop()
   }
 
@@ -189,6 +179,16 @@ object CliArgs {
       sys.exit(2)
     }
     args(i + 1)
+  }
+
+  /** The reference CLIs' failure exit: one `error:` line (the message's
+    * first non-empty line), exit 1, no stack trace.
+    */
+  def fail(e: Throwable): Nothing = {
+    System.err.println("error: " + Option(e.getMessage)
+      .flatMap(_.linesIterator.find(_.nonEmpty))
+      .getOrElse(e.getClass.getSimpleName))
+    sys.exit(1)
   }
 }
 

@@ -1,6 +1,7 @@
 package graft.cli
 
 import graft.config.ConfigLoader
+import java.io.{FileDescriptor, FileOutputStream, PrintStream}
 
 /** Unified `graft` root command — one binary-style entry point
   * dispatching the five subcommands with shared persistent flags,
@@ -36,7 +37,7 @@ object GraftMain {
       |             <command> [args]
       |
       |commands:
-      |  analyze  <migrationsDir> [--pg-version N] [--fail-on-high] [--format text|json|github-actions]
+      |  analyze  <migrationsDir> [--pg-version N] [--fail-on-high] [--format text|json|github-actions|sarif]
       |  apply    <migrationsDir> <trackerDir> [--dry-run] [--force] [--pg-version N]
       |           [--lock-timeout D] [--statement-timeout D]   (D like 10s, 1m, 250ms)
       |  rollback <migrationsDir> <trackerDir> (--steps N | --target V)
@@ -44,7 +45,7 @@ object GraftMain {
       |  status   <migrationsDir> <trackerDir> [--format text|json]
       |  stats    <dataDir> <trackerDir> [--tables t1,t2,...]""".stripMargin
 
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit = Utf8Stdout {
     // split persistent flags (anywhere) from subcommand + its args
     var configPath = ""
     var databaseUrl = ""
@@ -148,4 +149,13 @@ object GraftMain {
         sys.exit(2)
     }
   }
+}
+
+/** Runs a CLI main with stdout in UTF-8 whatever the locale: rule
+  * messages carry em-dashes, which a C locale prints as `?`.
+  */
+object Utf8Stdout {
+  private lazy val out = new PrintStream(
+    new FileOutputStream(FileDescriptor.out), true, "UTF-8")
+  def apply[T](body: => T): T = { System.setOut(out); Console.withOut(out)(body) }
 }

@@ -3,7 +3,7 @@ package graft.cli
 import graft.analyzer.Analyzer
 import graft.classify.SqlClassifier
 import graft.loader.MigrationLoader
-import graft.model.Severity
+import graft.model.{EngineError, Severity}
 import graft.tracker.ParquetTracker
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -143,7 +143,7 @@ object PlanMain {
     if (!df0.columns.contains(colName)) return None
     Some(df0.filter(col(colName).isNull).count())
   }
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit = Utf8Stdout {
     if (args.length < 2) {
       System.err.println(
         "usage: PlanMain <migrationsDir> <trackerDir> [--pg-version N] " +
@@ -291,6 +291,8 @@ object PlanMain {
       if (pending.isEmpty) println("(nothing to do — up to date)")
       else if (anyBlocked)
         println("\nApply would be blocked: HIGH/CRITICAL findings present.")
+    } catch {
+      case e: EngineError => CliArgs.fail(e)
     } finally spark.stop()
   }
 }

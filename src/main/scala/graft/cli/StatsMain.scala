@@ -28,7 +28,7 @@ object StatsMain {
   /** Octile fractions shared with q83 / PlanMain's estimator. */
   val octiles: Seq[Double] = Seq(0.125, 0.25, 0.375, 0.5, 0.625, 0.75, 0.875)
 
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit = Utf8Stdout {
     if (args.length < 2) {
       System.err.println(
         "usage: StatsMain <dataDir> <trackerDir> [--tables t1,t2,...]")

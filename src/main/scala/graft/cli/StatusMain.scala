@@ -1,6 +1,7 @@
 package graft.cli
 
 import graft.loader.MigrationLoader
+import graft.model.EngineError
 import graft.tracker.ParquetTracker
 
 /** `status` command: applied / pending / rolled-back overview — the
@@ -17,7 +18,7 @@ import graft.tracker.ParquetTracker
   * the same drift detection, for tooling that polls migration state.
   */
 object StatusMain {
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit = Utf8Stdout {
     if (args.length < 2) {
       System.err.println(
         "usage: StatusMain <migrationsDir> <trackerDir> [--format text|json]")
@@ -78,6 +79,8 @@ object StatusMain {
         pending.foreach(m => println(f"  ${m.version}%-16s ${m.name}"))
         if (pending.isEmpty) println("  (none — up to date)")
       }
+    } catch {
+      case e: EngineError => CliArgs.fail(e)
     } finally spark.stop()
   }
 }

@@ -1,8 +1,12 @@
 package graft.loader
 
-import graft.model.Migration
+import graft.model.{Migration, MigrationsDirUnreadable}
+import java.io.File
+import java.net.URI
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.Files
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.input_file_name
 
 /** Migration-file source.
   *
@@ -14,13 +18,18 @@ import org.apache.spark.sql.functions._
   *   - files pair by `version_name`; a `.down.sql` without its
   *     `.up.sql` is an orphan and is skipped (loader.go:84-86);
   *   - SQL content is whitespace-trimmed (loader.go:108);
-  *   - checksum = SHA-256 hex of the up SQL.
+  *   - checksum = SHA-256 hex of the up SQL;
+  *   - a missing or unreadable directory is an error; an existing
+  *     directory without migration files loads nothing.
   *
-  * Spark-first shape (SURVEY.md S1-S3): `wholetext` scan +
-  * `input_file_name()` + `regexp_extract`, then an up/down pivot via
-  * `groupBy(version, name).agg(max(when(...)))` — one shuffle on the
-  * (tiny) migration key, no self-join needed. Checksum via built-in
-  * `sha2(..., 256)` — codegen'd, no UDF.
+  * All of that is [[fromFiles]]: [[loadLocal]] lists a directory into
+  * it on the driver (every CLI command), [[load]] feeds it the rows of a
+  * `wholetext` scan (the Dataset-shaped m-queries).
+  *
+  * The trim is `String.trim` (every char <= U+0020), which every stored
+  * tracker checksum was computed with. Known deviation: Go's TrimSpace
+  * keeps the C0 controls other than \t \n \v \f \r and strips U+0085
+  * and U+00A0.
   */
 object MigrationLoader {
 
@@ -28,40 +37,41 @@ object MigrationLoader {
     * → ("20240101120000", n, "up").
     */
   val fileRegex = "^(?:V(\\d+)|(\\d{14}))_(.+)\\.(up|down)\\.sql$"
+  private val FileName = fileRegex.r
 
-  /** Distributed load: Dataset[Migration] from a directory of .sql files. */
+  /** (path, content) pairs → version-sorted migrations: filename parse,
+    * trim, up/down pairing and checksum. Paths are kept as `filePath`.
+    */
+  def fromFiles(files: Seq[(String, String)]): Seq[Migration] = {
+    val parsed = files.flatMap { case (path, content) =>
+      new File(path).getName match {
+        case FileName(vnum, vts, name, dirn) =>
+          Some((if (vnum != null) vnum else vts, name, dirn,
+            content.trim, path))
+        case _ => None
+      }
+    }
+    parsed.groupBy(t => (t._1, t._2)).toSeq
+      .flatMap { case ((version, name), group) =>
+        val down = group.find(_._3 == "down").fold("")(_._4)
+        group.find(_._3 == "up").map(u =>
+          Migration(version, name, u._4, down, u._5))
+      } // orphan down without up → skipped
+      .sortBy(_.version)
+  }
+
+  /** Distributed load: Dataset[Migration] from a directory of .sql
+    * files. The scan is Spark's; the rows go through [[fromFiles]] in
+    * one task (a migration set is metadata-sized).
+    */
   def load(spark: SparkSession, dir: String): Dataset[Migration] = {
     import spark.implicits._
-    val files = spark.read.option("wholetext", "true")
-      .text(s"$dir/*.sql")
-      .select(
-        element_at(split(input_file_name(), "/"), -1).as("fname"),
-        input_file_name().as("path"),
-        $"value".as("content"))
-    val parsed = files
-      .withColumn("vnum", regexp_extract($"fname", fileRegex, 1))
-      .withColumn("vts", regexp_extract($"fname", fileRegex, 2))
-      .withColumn("name", regexp_extract($"fname", fileRegex, 3))
-      .withColumn("direction", regexp_extract($"fname", fileRegex, 4))
-      .filter($"direction" =!= "") // non-matching filenames skipped
-      .withColumn("version",
-        when($"vnum" =!= "", $"vnum").otherwise($"vts"))
-    // NB: Spark's trim() strips only ' '; the reference's TrimSpace strips
-    // all whitespace — use a regexp to match its semantics exactly.
-    def wtrim(c: org.apache.spark.sql.Column) =
-      regexp_replace(c, "^\\s+|\\s+$", "")
-    val paired = parsed
-      .groupBy($"version", $"name")
-      .agg(
-        max(when($"direction" === "up", wtrim($"content"))).as("upSql"),
-        max(when($"direction" === "down", wtrim($"content"))).as("downSql"),
-        max(when($"direction" === "up", $"path")).as("filePath"))
-      .filter($"upSql".isNotNull) // orphan .down.sql skipped
-      .na.fill("", Seq("downSql"))
-      .withColumn("checksum", sha2($"upSql", 256))
-      .select($"version", $"name", $"upSql", $"downSql", $"checksum",
-        $"filePath")
-    paired.as[Migration]
+    spark.read.option("wholetext", "true").text(s"$dir/*.sql")
+      .select(input_file_name(), $"value").as[(String, String)]
+      .coalesce(1)
+      .mapPartitions(rows => MigrationLoader.fromFiles(rows.map {
+        case (uri, content) => (URI.create(uri).getPath, content)
+      }.toSeq).iterator)
   }
 
   /** Load + version-sort (reference `migration.Sort`, sorter.go:7-16 —
@@ -71,32 +81,13 @@ object MigrationLoader {
   def loadSorted(spark: SparkSession, dir: String): Dataset[Migration] =
     load(spark, dir).orderBy("version")
 
-  /** Driver-side load for the executor path (migration sets are tens of
-    * rows; no cluster needed). Same semantics as [[load]].
+  /** Driver-side load, version-sorted; throws [[MigrationsDirUnreadable]]
+    * when `dir` is missing or cannot be listed.
     */
   def loadLocal(dir: String): Seq[Migration] = {
-    val d = new java.io.File(dir)
-    val re = fileRegex.r
-    val files = Option(d.listFiles()).getOrElse(Array.empty)
-      .filter(_.isFile)
-      .flatMap { f =>
-        f.getName match {
-          case re(vnum, vts, name, dirn) =>
-            val version = if (vnum != null) vnum else vts
-            Some((version, name, dirn,
-              new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8").trim,
-              f.getAbsolutePath))
-          case _ => None
-        }
-      }
-    files.groupBy(t => (t._1, t._2)).toSeq
-      .flatMap { case ((version, name), group) =>
-        val up = group.find(_._3 == "up")
-        val down = group.find(_._3 == "down")
-        up.map { u =>
-          Migration(version, name, u._4, down.map(_._4).getOrElse(""), u._5)
-        } // orphan down without up → None (skipped)
-      }
-      .sortBy(_.version)
+    val listed = Option(new File(dir).listFiles())
+      .getOrElse(throw MigrationsDirUnreadable(dir))
+    fromFiles(listed.toSeq.filter(_.isFile).map(f =>
+      (f.getAbsolutePath, new String(Files.readAllBytes(f.toPath), UTF_8))))
   }
 }

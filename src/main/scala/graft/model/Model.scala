@@ -27,8 +27,8 @@ final case class Migration(
 
 object Migration {
 
-  /** SHA-256 hex digest of the up SQL. Driver-side twin of Spark's
-    * `sha2(col, 256)`; both must agree (tested).
+  /** SHA-256 hex digest of the up SQL (lowercase hex, the same text
+    * Spark's `sha2(col, 256)` and DuckDB's `sha256` produce).
     */
   def computeChecksum(sql: String): String = {
     val d = MessageDigest.getInstance("SHA-256")
@@ -132,6 +132,8 @@ case object LockNotAcquired extends EngineError(
   "migration lock is held by another process")
 final case class MigrationNotFound(version: String) extends EngineError(
   s"migration $version not found")
+final case class MigrationsDirUnreadable(dir: String) extends EngineError(
+  s"reading migrations directory $dir: not found or not readable")
 final case class MigrationFileMissing(version: String) extends EngineError(
   s"no migration file found for applied version $version")
 final case class DangerousMigrations(versions: Seq[String]) extends EngineError(

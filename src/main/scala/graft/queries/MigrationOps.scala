@@ -30,12 +30,14 @@ object MigrationOps {
   val impactDir = "/root/repo/fixtures/impact"
 
   /** Shared oracle CTE: filename→(version, name, direction) parse +
-    * whitespace trim + up/down pivot, mirroring MigrationLoader exactly
-    * (same regex, same \s trim, orphan .down skipped). Parameterized by
-    * fixture dir (m01-m06 read `fixturesDir`, m11 reads `impactDir`).
+    * whitespace trim + up/down pivot, re-deriving MigrationLoader (same
+    * regex, orphan .down skipped). Its trim is RE2's `\s` ([\t\n\f\r ]),
+    * not the loader's `String.trim` (every char <= U+0020); they agree on
+    * the fixture corpora, which hold no edge control characters.
+    * Parameterized by fixture dir (m01-m06 `fixturesDir`, m11 `impactDir`).
     */
   private def loaderCteFor(dir: String): String = {
-    val re = "^(?:V(\\d+)|(\\d{14}))_(.+)\\.(up|down)\\.sql$"
+    val re = MigrationLoader.fileRegex
     s"""WITH f AS (
         SELECT regexp_extract(filename, '([^/]+)$$', 1) AS fname, content
         FROM read_text('$dir/*.sql')),

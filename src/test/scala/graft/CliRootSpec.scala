@@ -131,6 +131,54 @@ class CliRootSpec extends AnyFunSuite {
     // SAFE migrations emit nothing
     assert(!out.contains("011_safe_concurrent_index") ||
       !lines.exists(_.contains("011_safe_concurrent_index")))
+    // `file=` is a filesystem path GitHub can match, not a file: URI
+    lines.foreach { l =>
+      val file = l.stripPrefix("::").dropWhile(_ != '=').tail
+        .takeWhile(_ != ',')
+        .replace("%2C", ",").replace("%3A", ":").replace("%25", "%")
+      assert(java.nio.file.Files.isRegularFile(java.nio.file.Paths.get(file)),
+        s"annotation names no existing file: $l")
+    }
+  }
+
+  /** The fixture corpus, resolved against the repository root (the
+    * forked test JVM's working directory).
+    */
+  private val fixtures = java.nio.file.Paths.get("fixtures/migrations")
+    .toAbsolutePath.toString
+
+  test("graft analyze runs without a SparkSession: --format json " +
+      "stdout+stderr is exactly one line of JSON") {
+    val (code, out) = graft("analyze", fixtures, "--format", "json")
+    assert(code == 0, s"analyze failed:\n$out")
+    val lines = out.linesIterator.toSeq
+    assert(lines.length == 1, s"expected one line, got:\n$out")
+    val root = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(lines.head)
+    assert(root.isArray && root.size() == 27)
+  }
+
+  test("graft analyze/apply on a missing migrations directory exit " +
+      "non-zero; analyze on an empty one reports zero migrations") {
+    val parent = java.nio.file.Files.createTempDirectory("graft-nodir")
+    val missing = parent.resolve("no-such-dir").toString
+    val (ca, oa) = graft("analyze", missing, "--format", "json")
+    assert(ca != 0 && oa.contains("reading migrations directory"), oa)
+    val tracker = java.nio.file.Files
+      .createTempDirectory("graft-nodir-tracker").toString
+    val (cp, op) = graftEnv(Map("GRAFT_WAREHOUSE" -> parent.toString),
+      "apply", missing, tracker)
+    assert(cp != 0 && op.contains("reading migrations directory"), op)
+    assert(!op.contains("applied 0, skipped 0"), op)
+    val (ce, oe) = graft("analyze", parent.toString)
+    assert(ce == 0 && oe.contains("Analyzed 0 migration(s)"), oe)
+  }
+
+  test("graft output is UTF-8 whatever the locale") {
+    val (code, out) = graftEnv(Map("LANG" -> "C", "LC_ALL" -> "C"),
+      "analyze", fixtures, "--format", "json")
+    assert(code == 0, s"analyze failed:\n$out")
+    assert(out.contains("—"), out)
   }
 
   test("graft analyze --format sarif emits valid SARIF 2.1.0: one run, " +
